@@ -37,14 +37,15 @@ Deterministic rules (pinned by tests and the SQL oracles):
 - parse failure yields zero rows (never raises — house recovery
   contract)
 
-Spark surface: ONE mapInPandas explode per batch each (Arrow-batched;
-the per-doc Python is the parser itself — same shape as
-ops/tables.extract_tables_df). Narrow map, no shuffle.
+Spark surface: one udfs.explode_docs mapInPandas explode each
+(Arrow-batched; the per-doc Python is the parser itself). Narrow map,
+no shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from operator import itemgetter
+from typing import Optional
 
 from pyspark.sql import DataFrame
 
@@ -168,33 +169,16 @@ def extract_captions_df(
 ) -> DataFrame:
     """Explode documents into image-caption rows: (doc_id, img_idx,
     media_ref, caption, caption_source)."""
-    import pandas as pd
+    from ..udfs import explode_docs
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_captions(m):
-                    rows.append(
-                        (
-                            int(did),
-                            r["img_idx"],
-                            r["media_ref"],
-                            r["caption"],
-                            r["caption_source"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "img_idx", "media_ref",
-                    "caption", "caption_source",
-                ],
-            )
-
-    return docs.mapInPandas(gen, schema=CAPTION_SCHEMA)
+    row = itemgetter("img_idx", "media_ref", "caption", "caption_source")
+    return explode_docs(
+        docs,
+        lambda markup, _: [row(r) for r in extract_captions(markup)],
+        CAPTION_SCHEMA,
+        id_col=id_col,
+        markup_col=markup_col,
+    )
 
 
 def extract_outline_df(
@@ -202,27 +186,13 @@ def extract_outline_df(
 ) -> DataFrame:
     """Explode documents into heading-outline rows: (doc_id, seq,
     level, heading, path)."""
-    import pandas as pd
+    from ..udfs import explode_docs
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_outline(m):
-                    rows.append(
-                        (
-                            int(did),
-                            r["seq"],
-                            r["level"],
-                            r["heading"],
-                            r["path"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "seq", "level", "heading", "path"],
-            )
-
-    return docs.mapInPandas(gen, schema=OUTLINE_SCHEMA)
+    row = itemgetter("seq", "level", "heading", "path")
+    return explode_docs(
+        docs,
+        lambda markup, _: [row(r) for r in extract_outline(markup)],
+        OUTLINE_SCHEMA,
+        id_col=id_col,
+        markup_col=markup_col,
+    )

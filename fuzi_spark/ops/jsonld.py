@@ -28,14 +28,15 @@ Deterministic extraction rules (pinned by tests and the SQL oracle):
 - a script whose body is not valid JSON is SKIPPED (recovery, never
   raises); non-object items (strings/numbers in an array) are skipped
 
-Spark surface: ONE mapInPandas explode per batch (Arrow-batched; the
-same shape as tables.extract_tables_df). Narrow map, no shuffle.
+Spark surface: one udfs.explode_docs mapInPandas explode (Arrow-
+batched). Narrow map, no shuffle.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator, Optional
+from operator import itemgetter
+from typing import Optional
 
 from pyspark.sql import DataFrame
 
@@ -124,28 +125,16 @@ def extract_json_ld_df(
     docs: DataFrame, markup_col: str = "markup", id_col: str = "doc_id"
 ) -> DataFrame:
     """Explode documents into JSON-LD item rows."""
-    import pandas as pd
+    from ..udfs import explode_docs
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_json_ld(m):
-                    rows.append(
-                        (
-                            int(did), r["script_idx"], r["item_idx"],
-                            r["ld_type"], r["name"], r["date_published"],
-                            r["author"], r["url"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "script_idx", "item_idx", "ld_type",
-                    "name", "date_published", "author", "url",
-                ],
-            )
-
-    return docs.mapInPandas(gen, schema=JSONLD_SCHEMA)
+    row = itemgetter(
+        "script_idx", "item_idx", "ld_type", "name", "date_published",
+        "author", "url",
+    )
+    return explode_docs(
+        docs,
+        lambda markup, _: [row(r) for r in extract_json_ld(markup)],
+        JSONLD_SCHEMA,
+        id_col=id_col,
+        markup_col=markup_col,
+    )

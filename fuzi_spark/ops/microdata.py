@@ -15,14 +15,14 @@ from the same parsed DOM the main-content extractor already builds:
   textstats.detect_code); language labels come from the class
   conventions highlight.js/Prism/GitHub actually emit.
 
-Both are mapInPandas explodes of the (doc_id, markup) table — one
+Both are udfs.explode_docs explodes of the (doc_id, markup) table — one
 Arrow batch in, parse once, walk, rows out; never per-row Python.
 Malformed markup yields fewer/zero rows, never a task failure.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 
@@ -118,30 +118,16 @@ def extract_microdata_df(
     docs: DataFrame, markup_col: str = "markup", id_col: str = "doc_id"
 ) -> DataFrame:
     """Explode documents into microdata property rows."""
-    import pandas as pd
+    from ..udfs import explode_docs
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_microdata(m):
-                    rows.append(
-                        (
-                            int(did), r["scope_idx"], r["item_type"],
-                            r["prop"], r["value"], r["prop_idx"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "scope_idx", "item_type", "prop",
-                    "value", "prop_idx",
-                ],
-            )
-
-    return docs.mapInPandas(gen, schema=MICRODATA_SCHEMA)
+    row = itemgetter("scope_idx", "item_type", "prop", "value", "prop_idx")
+    return explode_docs(
+        docs,
+        lambda markup, _: [row(r) for r in extract_microdata(markup)],
+        MICRODATA_SCHEMA,
+        id_col=id_col,
+        markup_col=markup_col,
+    )
 
 
 # --------------------------------------------------------- code blocks
@@ -217,27 +203,13 @@ def extract_code_blocks_df(
     docs: DataFrame, markup_col: str = "markup", id_col: str = "doc_id"
 ) -> DataFrame:
     """Explode documents into code-block rows."""
-    import pandas as pd
+    from ..udfs import explode_docs
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_code_blocks(m):
-                    rows.append(
-                        (
-                            int(did), r["block_idx"], r["language"],
-                            r["code"], r["n_lines"], r["n_chars"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "block_idx", "language", "code",
-                    "n_lines", "n_chars",
-                ],
-            )
-
-    return docs.mapInPandas(gen, schema=CODEBLOCK_SCHEMA)
+    row = itemgetter("block_idx", "language", "code", "n_lines", "n_chars")
+    return explode_docs(
+        docs,
+        lambda markup, _: [row(r) for r in extract_code_blocks(markup)],
+        CODEBLOCK_SCHEMA,
+        id_col=id_col,
+        markup_col=markup_col,
+    )

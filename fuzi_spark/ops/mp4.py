@@ -215,7 +215,9 @@ def _parse_trak(b: bytes, ts: int, te: int) -> Optional[dict]:
                 offsets[si] = off
                 off += sizes[si]
                 si += 1
-    kf = [(i, offsets[i], sizes[i]) for i in sync if i < len(sizes)]
+    # stss is 1-based: a corrupt 0 entry becomes -1 and must be dropped,
+    # not wrapped around to the last sample by negative indexing
+    kf = [(i, offsets[i], sizes[i]) for i in sync if 0 <= i < len(sizes)]
     dur_ms = (duration * 1000) // timescale if timescale else None
     return {
         "container": "mp4", "codec": codec, "width": info["width"],

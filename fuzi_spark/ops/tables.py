@@ -20,14 +20,14 @@ Deterministic rules (pinned by tests and the SQL oracle):
 - rows with zero cells are dropped; parse failure yields zero rows
   (never raises — house recovery contract)
 
-Spark surface: ONE mapInPandas explode per batch (Arrow-batched; the
-per-doc Python is the parser itself — same shape as warc.parse_warc_df).
+Spark surface: one udfs.explode_docs mapInPandas explode (Arrow-
+batched; the per-doc Python is the parser itself).
 Narrow map, no shuffle: composes with downstream aggs for free.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 
@@ -117,31 +117,15 @@ def extract_tables_df(
 ) -> DataFrame:
     """Explode documents into table rows: (doc_id, table_idx, row_idx,
     is_header, cells, n_cells)."""
-    import pandas as pd
+    from ..udfs import explode_docs
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_tables(m):
-                    rows.append(
-                        (
-                            int(did),
-                            r["table_idx"],
-                            r["row_idx"],
-                            r["is_header"],
-                            r["cells"],
-                            len(r["cells"]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "table_idx", "row_idx",
-                    "is_header", "cells", "n_cells",
-                ],
-            )
+    def per_doc(markup, _):
+        return [
+            (r["table_idx"], r["row_idx"], r["is_header"], r["cells"],
+             len(r["cells"]))
+            for r in extract_tables(markup)
+        ]
 
-    return docs.mapInPandas(gen, schema=TABLE_SCHEMA)
+    return explode_docs(
+        docs, per_doc, TABLE_SCHEMA, id_col=id_col, markup_col=markup_col
+    )

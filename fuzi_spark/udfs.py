@@ -7,6 +7,23 @@ snapshots crossing the executor boundary. There are NO row-at-a-time
 Python UDFs anywhere (input_hint hard requirement) — everything is
 `pandas_udf` / `mapInPandas` over Arrow batches.
 
+Every per-document markup operator in the package goes through one of
+two operators defined here, which own that contract:
+
+- `doc_column(return_type, per_doc, ...)` — a pandas_udf column: each
+  markup string is sniffed and parsed (`_parse_doc`) and `per_doc(doc)`
+  gives the column's value for it (a tuple of fields for struct types).
+- `explode_docs(docs, per_doc, schema, ...)` — a mapInPandas explode:
+  `per_doc(markup, doc_type)` gives the rows of one document, and each
+  output row is led by the document's id.
+
+Both never raise on bad input: null markup, and for `doc_column` markup
+no parser accepts, yields the caller's `missing` value (null by default;
+the all-null struct for struct types, since Spark cannot null a struct
+row). Namespace prefixes reach the query engine through the
+`extra_ns` argument of `fuzi_spark.query`; a parsed document's own
+`namespaces` are never mutated.
+
 XPath/CSS expressions are compiled ONCE per executor process
 (lru_cache in xpath.py / css.py) and reused across every batch — an
 optimization the reference lacks (it re-compiles per query,
@@ -15,7 +32,7 @@ Queryable.swift:299).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Callable, Iterator, Optional
 
 import pandas as pd
 
@@ -25,9 +42,9 @@ from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DataType,
     DoubleType,
     IntegerType,
-    LongType,
     MapType,
     StringType,
     StructField,
@@ -95,6 +112,90 @@ def _parse_doc(markup: str, doc_type: Optional[str]):
         return None
 
 
+# ---------------------------------------------------------------- operators
+
+
+def doc_column(
+    return_type,
+    per_doc: Callable,
+    *,
+    doc_type: Optional[str] = None,
+    missing=None,
+):
+    """Column function over a markup column: per_doc(doc) on each parsed
+    document, `missing` for null or unparseable markup.
+
+    return_type is a DataType or a DDL string. For a struct return_type,
+    per_doc returns a tuple of the fields in schema order and `missing`
+    defaults to the all-null tuple."""
+    if isinstance(return_type, str):
+        return_type = DataType.fromDDL(return_type)
+    fields = return_type.fieldNames() if isinstance(return_type, StructType) else None
+    if fields is not None and missing is None:
+        missing = (None,) * len(fields)
+
+    def values(batch: pd.Series) -> list:
+        out = []
+        for text in batch:
+            doc = _parse_doc(text, doc_type) if text is not None else None
+            out.append(missing if doc is None else per_doc(doc))
+        return out
+
+    if fields is None:
+
+        def _udf(batch: pd.Series) -> pd.Series:
+            return pd.Series(values(batch), dtype=object)
+
+    else:
+
+        def _udf(batch: pd.Series) -> pd.DataFrame:
+            return pd.DataFrame(values(batch), columns=fields)
+
+    return pandas_udf(_udf, return_type)
+
+
+def explode_docs(
+    docs: DataFrame,
+    per_doc: Callable,
+    schema,
+    *,
+    id_col: str = "doc_id",
+    markup_col: str = "markup",
+    doc_type: Optional[str] = None,
+    missing=(),
+) -> DataFrame:
+    """mapInPandas explode of docs(id, markup[, doc_type]): one document in,
+    the rows of per_doc(markup, doc_type) out, each led by the document's
+    id. Null markup yields the rows in `missing`. A row-level doc_type
+    column, when present, overrides the doc_type argument.
+
+    Output columns are built one list each and assigned to `schema` by
+    position (the frame's labels are integers)."""
+    cols = [F.col(id_col), F.col(markup_col)]
+    has_type = "doc_type" in docs.columns
+    if has_type:
+        cols.append(F.col("doc_type"))
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            doc_ids = pdf.iloc[:, 0].to_numpy()
+            markups = pdf.iloc[:, 1].to_numpy()
+            types = pdf["doc_type"].to_numpy() if has_type else None
+            ids, rows = [], []
+            for i in range(len(pdf)):
+                text = markups[i]
+                if text is None:
+                    got = missing
+                else:
+                    got = per_doc(text, types[i] if types is not None else doc_type)
+                ids.extend([doc_ids[i]] * len(got))
+                rows.extend(got)
+            if rows:
+                yield pd.DataFrame(dict(enumerate([ids, *map(list, zip(*rows))])))
+
+    return docs.select(*cols).mapInPandas(fn, schema=schema)
+
+
 # ---------------------------------------------------------------- extraction
 
 
@@ -114,113 +215,63 @@ def markup_from_spans_col(spans_col: str = "spans"):
     )
 
 
-def make_extract_markup_fn(doc_type: Optional[str] = None):
-    """mapInPandas function: (doc_id, markup[, doc_type]) batches →
-    extracted span rows.
-
-    One input row (a whole document) produces N output rows (its content
-    spans, seq-ordered). parse_error rows keep the doc_id with seq=-1 so
-    lineage can count failures without a second pass over the data."""
-    from .extract import extract_spans
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "seq": [],
-                "kind": [],
-                "text": [],
-                "media_ref": [],
-                "offset": [],
-                "parse_error": [],
-            }
-            has_type = "doc_type" in pdf.columns
-            doc_ids = pdf["doc_id"].to_numpy()
-            markups = pdf["markup"].to_numpy()
-            types = pdf["doc_type"].to_numpy() if has_type else None
-            for i in range(len(pdf)):
-                doc_id = doc_ids[i]
-                markup = markups[i]
-                dt = types[i] if types is not None else doc_type
-                if markup is None or not markup:
-                    extracted, err = [], 1
-                else:
-                    extracted, err = extract_spans(markup, dt)
-                if err or not extracted:
-                    out["doc_id"].append(doc_id)
-                    out["seq"].append(-1)
-                    out["kind"].append("error" if err else "empty")
-                    out["text"].append(None)
-                    out["media_ref"].append(None)
-                    out["offset"].append(-1)
-                    out["parse_error"].append(int(err))
-                    continue
-                for seq, s in enumerate(extracted):
-                    out["doc_id"].append(doc_id)
-                    out["seq"].append(seq)
-                    out["kind"].append(s["kind"])
-                    out["text"].append(s["text"])
-                    out["media_ref"].append(s["media_ref"])
-                    out["offset"].append(s["offset"])
-                    out["parse_error"].append(0)
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def extract_spans_df(docs: DataFrame, doc_type: Optional[str] = None) -> DataFrame:
-    """docs(doc_id, spans[, doc_type]) → extracted spans, one row per span.
-    The span→markup reassembly happens JVM-side (markup_from_spans_col)."""
+def spans_to_markup(docs: DataFrame) -> DataFrame:
+    """docs(doc_id, spans[, doc_type]) → (doc_id, markup[, doc_type]), the
+    codec applied JVM-side (markup_from_spans_col)."""
     cols = [F.col("doc_id"), markup_from_spans_col("spans").alias("markup")]
     if "doc_type" in docs.columns:
         cols.append(F.col("doc_type"))
-    return extract_markup_df(docs.select(*cols), doc_type)
+    return docs.select(*cols)
+
+
+def extract_spans_df(docs: DataFrame, doc_type: Optional[str] = None) -> DataFrame:
+    """docs(doc_id, spans[, doc_type]) → extracted spans, one row per span."""
+    return extract_markup_df(spans_to_markup(docs), doc_type)
+
+
+# the anchor row of a document without spans: seq=-1 keeps its doc_id so
+# lineage counts it without a second pass over the data
+_ERROR_ROW = ((-1, "error", None, None, -1, 1),)
 
 
 def extract_markup_df(docs: DataFrame, doc_type: Optional[str] = None) -> DataFrame:
-    """docs(doc_id, markup[, doc_type]) → extracted spans, for callers that
+    """docs(doc_id, markup[, doc_type]) → extracted spans (EXTRACTED_SCHEMA),
+    one row per span, seq-ordered; a document that fails to parse or has
+    no spans keeps one seq=-1 'error'/'empty' row. For callers that
     already ran the span→markup codec (run_extraction_pipeline applies it
     BEFORE the salting shuffle so the exchange carries one string column,
     not the array-of-structs spans payload)."""
-    cols = [F.col("doc_id"), F.col("markup")]
-    if "doc_type" in docs.columns:
-        cols.append(F.col("doc_type"))
-    return docs.select(*cols).mapInPandas(
-        make_extract_markup_fn(doc_type), schema=EXTRACTED_SCHEMA
+    from .extract import extract_spans
+
+    def per_doc(markup: str, dt: Optional[str]):
+        spans, err = extract_spans(markup, dt)
+        if err:
+            return _ERROR_ROW
+        if not spans:
+            return ((-1, "empty", None, None, -1, 0),)
+        return [
+            (seq, s["kind"], s["text"], s["media_ref"], s["offset"], 0)
+            for seq, s in enumerate(spans)
+        ]
+
+    return explode_docs(
+        docs, per_doc, EXTRACTED_SCHEMA, doc_type=doc_type, missing=_ERROR_ROW
     )
 
 
 # ---------------------------------------------------------------- query UDFs
 
 
-def _snapshot_series(markup_series: pd.Series, expr: str, doc_type, ns, is_css: bool):
-    from .css import css_to_xpath
-    from .query import element_snapshot, xpath as run_xpath
-
-    xp = css_to_xpath(expr) if is_css else expr
-    out = []
-    for markup in markup_series:
-        if markup is None:
-            out.append([])
-            continue
-        doc = _parse_doc(markup, doc_type)
-        if doc is None:
-            out.append([])
-            continue
-        if ns:
-            doc.namespaces.update(ns)
-        out.append([element_snapshot(n) for n in run_xpath(doc, xp)])
-    return pd.Series(out)
-
-
 def xpath_select(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup string → array<ElementSnapshot> of XPath hits."""
+    from .query import element_snapshot, xpath
 
-    @pandas_udf(SNAPSHOT_ARRAY)
-    def _udf(markup: pd.Series) -> pd.Series:
-        return _snapshot_series(markup, expr, doc_type, ns, is_css=False)
-
-    return _udf
+    return doc_column(
+        SNAPSHOT_ARRAY,
+        lambda doc: [element_snapshot(n) for n in xpath(doc, expr, ns)],
+        doc_type=doc_type,
+        missing=[],
+    )
 
 
 def css_select(selector: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
@@ -228,107 +279,70 @@ def css_select(selector: str, doc_type: Optional[str] = None, ns: Optional[dict]
     The selector is compiled to XPath at plan-build time (driver side)."""
     from .css import css_to_xpath
 
-    compiled = css_to_xpath(selector)
+    return xpath_select(css_to_xpath(selector), doc_type, ns)
 
-    @pandas_udf(SNAPSHOT_ARRAY)
-    def _udf(markup: pd.Series) -> pd.Series:
-        return _snapshot_series(markup, compiled, doc_type, ns, is_css=False)
 
-    return _udf
+def _eval_column(return_type, expr: str, doc_type, ns, value: Callable, missing=None):
+    """doc_column of value(eval_xpath(doc, expr)); `missing` also stands
+    for an expression the engine rejects (eval_xpath's None)."""
+    from .query import eval_xpath
+
+    def per_doc(doc):
+        r = eval_xpath(doc, expr, ns)
+        return missing if r is None else value(r)
+
+    return doc_column(return_type, per_doc, doc_type=doc_type, missing=missing)
 
 
 def xpath_string(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup → string(XPath expr). The cheap common case:
     only a string crosses Arrow, not full snapshots."""
-    from .query import eval_xpath
-
-    @pandas_udf(StringType())
-    def _udf(markup: pd.Series) -> pd.Series:
-        out = []
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            if doc is None:
-                out.append(None)
-                continue
-            if ns:
-                doc.namespaces.update(ns)
-            r = eval_xpath(doc, expr)
-            out.append(r.string_value if r is not None else None)
-        return pd.Series(out, dtype=object)
-
-    return _udf
+    return _eval_column(StringType(), expr, doc_type, ns, lambda r: r.string_value)
 
 
 def xpath_double(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup → number(XPath expr) (count/sum/...)."""
-    from .query import eval_xpath
-
-    @pandas_udf(DoubleType())
-    def _udf(markup: pd.Series) -> pd.Series:
-        out = []
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            if doc is None:
-                out.append(None)
-                continue
-            if ns:
-                doc.namespaces.update(ns)
-            r = eval_xpath(doc, expr)
-            out.append(r.double_value if r is not None else None)
-        return pd.Series(out, dtype="float64")
-
-    return _udf
+    return _eval_column(DoubleType(), expr, doc_type, ns, lambda r: r.double_value)
 
 
 def xpath_eval(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup → XPathResult struct (bool, double, string)
     — the reference's eval(xpath:) surface (Queryable.swift:252-257)."""
-    from .query import eval_xpath
+    return _eval_column(
+        XPATH_RESULT_STRUCT,
+        expr,
+        doc_type,
+        ns,
+        lambda r: (r.bool_value, r.double_value, r.string_value),
+        missing=(None, None, None),
+    )
 
-    @pandas_udf(XPATH_RESULT_STRUCT)
-    def _udf(markup: pd.Series) -> pd.DataFrame:
-        rows = {"bool_value": [], "double_value": [], "string_value": []}
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            r = eval_xpath(doc, expr) if doc is not None else None
-            rows["bool_value"].append(r.bool_value if r else None)
-            rows["double_value"].append(r.double_value if r else None)
-            rows["string_value"].append(r.string_value if r else None)
-        return pd.DataFrame(rows)
 
-    return _udf
+_DOC_META_STRUCT = StructType(
+    [
+        StructField("version", StringType()),
+        StructField("encoding", StringType()),
+        StructField("root_tag", StringType()),
+        StructField("title", StringType()),
+        StructField("parse_error", IntegerType()),
+    ]
+)
 
 
 def doc_meta(doc_type: Optional[str] = None):
     """Column function: markup → struct(version, encoding, root_tag,
     title, parse_error) — DocumentSnapshot surface (Actor.swift:67-86)."""
-    schema = StructType(
-        [
-            StructField("version", StringType()),
-            StructField("encoding", StringType()),
-            StructField("root_tag", StringType()),
-            StructField("title", StringType()),
-            StructField("parse_error", IntegerType()),
-        ]
-    )
+    missing = (None, None, None, None, 1)
 
-    @pandas_udf(schema)
-    def _udf(markup: pd.Series) -> pd.DataFrame:
-        rows = {"version": [], "encoding": [], "root_tag": [], "title": [], "parse_error": []}
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            if doc is None or doc.root is None:
-                rows["version"].append(None)
-                rows["encoding"].append(None)
-                rows["root_tag"].append(None)
-                rows["title"].append(None)
-                rows["parse_error"].append(1)
-            else:
-                rows["version"].append(doc.version)
-                rows["encoding"].append(doc.encoding)
-                rows["root_tag"].append(doc.root.tag)
-                rows["title"].append(doc.title if doc.is_html else None)
-                rows["parse_error"].append(0)
-        return pd.DataFrame(rows)
+    def per_doc(doc):
+        if doc.root is None:
+            return missing
+        return (
+            doc.version,
+            doc.encoding,
+            doc.root.tag,
+            doc.title if doc.is_html else None,
+            0,
+        )
 
-    return _udf
+    return doc_column(_DOC_META_STRUCT, per_doc, doc_type=doc_type, missing=missing)

@@ -12650,6 +12650,14 @@ class TestVideoContainers:
         for i, off, sz in m["keyframes"]:
             assert b[off] == 0xAB and sz == sizes[i]
 
+    def test_mp4_stss_zero_entry_dropped(self):
+        # stss is 1-based: a corrupt 0 entry (sample -1) must not wrap
+        # around to the last sample as a made-up keyframe
+        from fuzi_spark.ops.mp4 import build_mp4, parse_mp4
+
+        m = parse_mp4(build_mp4(sizes=[100, 80, 120], sync=[-1, 1]))
+        assert [k[0] for k in m["keyframes"]] == [1]
+
     def test_mkv_roundtrip_and_offsets(self):
         from fuzi_spark.ops.mp4 import build_mkv, parse_mkv
 
