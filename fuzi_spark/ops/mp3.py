@@ -792,6 +792,10 @@ def _decode_spectrum(bits: _Bits, g: dict, rate: int,
         if tid in (4, 14) or tid not in TABLE_GEOM:
             raise ValueError("invalid huffman table id")
         x, y = _read_pair(bits, tid, prof)
+        if bits.pos > limit_bit:
+            # a corrupt part2_3_length: the big values would read into
+            # the next granule-channel, so the frame is skipped instead
+            raise ValueError("big_values overrun part2_3_length")
         vals[pos] = x
         if pos + 1 < 576:
             vals[pos + 1] = y

@@ -51,6 +51,10 @@ from pyspark.sql.types import (
 
 # ------------------------------------------------------------- MP4
 
+# the widest values the Spark schemas below hold (IntegerType / LongType)
+_INT32_MAX = (1 << 31) - 1
+_INT64_MAX = (1 << 63) - 1
+
 
 def parse_mp4(content) -> Optional[dict]:
     """ISO BMFF walk -> dict(codec, width, height, timescale,
@@ -101,6 +105,15 @@ def _parse_mp4(b: bytes) -> Optional[dict]:
 
 def _fullbox(b: bytes, s: int) -> tuple:
     return b[s], int.from_bytes(b[s + 1:s + 4], "big")  # version, flags
+
+
+def _stts_samples(b: bytes, body: int, e: int) -> int:
+    """Sum of an stts box's per-entry sample counts; the entry count is
+    clamped to the bytes present in the box."""
+    n = min(int.from_bytes(b[body:body + 4], "big"),
+            max(0, e - body - 4) // 8)
+    return sum(int.from_bytes(b[p:p + 4], "big")
+               for p in range(body + 4, body + 4 + 8 * n, 8))
 
 
 def _parse_trak(b: bytes, ts: int, te: int) -> Optional[dict]:
@@ -155,13 +168,7 @@ def _parse_trak(b: bytes, ts: int, te: int) -> Optional[dict]:
             if n >= 1 and body + 12 <= e:
                 codec = b[body + 8:body + 12].decode("ascii", "replace")
         elif typ == b"stts":
-            n = min(int.from_bytes(b[body:body + 4], "big"),
-                    max(0, e - body - 4) // 8)
-            p = body + 4
-            for _ in range(n):
-                cnt = int.from_bytes(b[p:p + 4], "big")
-                n_samples += cnt
-                p += 8
+            n_samples += _stts_samples(b, body, e)
         elif typ == b"stss":
             n = min(int.from_bytes(b[body:body + 4], "big"),
                     max(0, e - body - 4) // 4)
@@ -219,6 +226,13 @@ def _parse_trak(b: bytes, ts: int, te: int) -> Optional[dict]:
     # not wrapped around to the last sample by negative indexing
     kf = [(i, offsets[i], sizes[i]) for i in sync if 0 <= i < len(sizes)]
     dur_ms = (duration * 1000) // timescale if timescale else None
+    # a value past its VIDEO_KF_SCHEMA type is a corrupt field (one bit
+    # flip in a 32-bit stts count gives ~2^32 samples); emitted, it would
+    # abort the whole Arrow batch, so the track is unparsable instead
+    if (n_samples > _INT32_MAX or max(sizes) > _INT32_MAX
+            or max(offsets) > _INT64_MAX
+            or (dur_ms or 0) > _INT64_MAX):
+        return None
     return {
         "container": "mp4", "codec": codec, "width": info["width"],
         "height": info["height"], "timescale": timescale,
@@ -614,10 +628,13 @@ _CODEC_CANON = {
 def video_container_dedup(media: DataFrame) -> DataFrame:
     """Dedup videos WITHOUT decoding a single coded frame: the
     container fingerprint is xxhash64 over (canonical codec family,
-    sample count, the exact keyframe-size vector) — a remux of the
-    same coded stream into the other container (mp4 <-> mkv) carries
-    identical sample geometry, so it collides; any re-ENCODE changes
-    every coded size, so it does not. This is the honest dedup
+    sample count, total coded bytes, the exact keyframe-size vector) —
+    a remux of the same coded stream into the other container (mp4 <->
+    mkv) carries identical sample geometry, so it collides; any
+    re-ENCODE changes every coded size, so it does not. MKV SimpleBlock
+    lacing is not handled: a laced block counts as one sample of the
+    whole lace, so a laced remux does not collide with its mp4
+    original. This is the honest dedup
     operating point available at parse_ok-level (ops/mp4.py module
     docstring): no pixels, no codec libraries, pure Catalyst after
     the one container-walk MapInPandas.
@@ -738,15 +755,12 @@ def _parse_m4a(b: bytes) -> Optional[dict]:
                         rate = int.from_bytes(
                             b[ent + 24:ent + 28], "big") >> 16
             elif typ2 == b"stts":
-                n = min(int.from_bytes(b[body:body + 4], "big"),
-                        max(0, e2 - body - 4) // 8)
-                p = body + 4
-                for _ in range(n):
-                    n_samples += int.from_bytes(b[p:p + 4], "big")
-                    p += 8
-        if codec is None:
-            continue
+                n_samples += _stts_samples(b, body, e2)
         dur_ms = (duration * 1000) // timescale if timescale else None
+        # past its M4A_SCHEMA type a value is corrupt (see _parse_trak)
+        if (codec is None or n_samples > _INT32_MAX
+                or (dur_ms or 0) > _INT64_MAX):
+            continue
         return {
             "codec": codec,
             "channels": channels,

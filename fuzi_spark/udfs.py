@@ -13,6 +13,9 @@ two operators defined here, which own that contract:
 - `doc_column(return_type, per_doc, ...)` — a pandas_udf column: each
   markup string is sniffed and parsed (`_parse_doc`) and `per_doc(doc)`
   gives the column's value for it (a tuple of fields for struct types).
+  The query columns of one select share ONE parse per document per
+  Arrow batch (`_batch_docs`), so `per_doc` must treat `doc` as
+  read-only: the same document object is handed to every column.
 - `explode_docs(docs, per_doc, schema, ...)` — a mapInPandas explode:
   `per_doc(markup, doc_type)` gives the rows of one document, and each
   output row is led by the document's id.
@@ -114,6 +117,42 @@ def _parse_doc(markup: str, doc_type: Optional[str]):
 
 # ---------------------------------------------------------------- operators
 
+# Every pandas_udf of one select runs in one ArrowEvalPython node, which
+# ships a shared input column once; the worker then calls the UDFs one
+# after another on the SAME pd.Series object of each batch, one task at a
+# time per worker process. Module state is the only thing those calls
+# share, so the slot below keeps the last batch's parsed documents, keyed
+# on that object (held strongly, so its id cannot be recycled) and on
+# doc_type, and the other columns of the select reuse them.
+_shared_docs: Optional[tuple] = None  # (batch, doc_type, docs)
+
+# Markup characters per batch whose documents the slot keeps. A DOM costs
+# ~15x its markup, so this bounds the slot at ~240 MB per worker; rows past
+# it are parsed by each column on its own, one document alive at a time.
+_SHARED_MARKUP_BUDGET = 16 << 20
+
+
+def _batch_docs(batch: pd.Series, doc_type: Optional[str]) -> list:
+    """Parsed documents (None for null or unparseable markup) of the
+    batch's leading rows, up to _SHARED_MARKUP_BUDGET characters of
+    markup; parsed on the first call for (batch, doc_type) and shared
+    by every later one."""
+    global _shared_docs
+    slot = _shared_docs
+    if slot is not None and slot[0] is batch and slot[1] == doc_type:
+        return slot[2]
+    _shared_docs = None  # release the previous batch's documents first
+    docs = []
+    left = _SHARED_MARKUP_BUDGET
+    for text in batch:
+        if text is not None:
+            left -= len(text)
+            if left < 0:
+                break
+        docs.append(_parse_doc(text, doc_type) if text is not None else None)
+    _shared_docs = (batch, doc_type, docs)
+    return docs
+
 
 def doc_column(
     return_type,
@@ -127,7 +166,11 @@ def doc_column(
 
     return_type is a DataType or a DDL string. For a struct return_type,
     per_doc returns a tuple of the fields in schema order and `missing`
-    defaults to the all-null tuple."""
+    defaults to the all-null tuple.
+
+    Documents are parsed once per batch and shared with every other
+    doc_column of the same select (`_batch_docs`): per_doc must not
+    mutate `doc`."""
     if isinstance(return_type, str):
         return_type = DataType.fromDDL(return_type)
     fields = return_type.fieldNames() if isinstance(return_type, StructType) else None
@@ -135,9 +178,13 @@ def doc_column(
         missing = (None,) * len(fields)
 
     def values(batch: pd.Series) -> list:
+        docs = _batch_docs(batch, doc_type)
         out = []
-        for text in batch:
-            doc = _parse_doc(text, doc_type) if text is not None else None
+        for i, text in enumerate(batch):
+            if i < len(docs):
+                doc = docs[i]
+            else:
+                doc = _parse_doc(text, doc_type) if text is not None else None
             out.append(missing if doc is None else per_doc(doc))
         return out
 

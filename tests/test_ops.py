@@ -12328,6 +12328,43 @@ class TestMp3Codec:
                 for tid in g["table_select"]]
         assert any(tid >= 16 for tid in tids), tids
 
+    def test_short_part2_3_length_skips_the_frame(self):
+        """A corrupt part2_3_length shorter than the big-values region
+        must not let the Huffman reads run into the next granule: that
+        frame is skipped (1152 samples fewer), the stream still decodes."""
+        import numpy as np
+
+        from fuzi_spark.ops.mp3 import (
+            _Bits,
+            _parse_side_info,
+            _scan_id3,
+            decode_mp3,
+            encode_mp3,
+        )
+
+        sig = self._tone(44100, secs=0.3)
+        enc = encode_mp3((sig * 32767).astype(np.int16), bitrate=192)
+        start, _ = _scan_id3(enc)
+        flen = (144 * 192 * 1000) // 44100
+        frame = start + 3 * flen  # a mid-stream frame, no padding
+        assert enc[frame] == 0xFF
+        si_bit = (frame + 4) * 8
+        g = _parse_side_info(_Bits(enc, si_bit), 1)["granules"][0][0]
+        assert g["big_values"] > 0
+        # mono side info: 9 + 5 + 4 bits precede gr0's 12-bit length;
+        # rewrite it to 1 inside the 3 bytes that hold it
+        bit = si_bit + 18
+        shift = 24 - 12 - bit % 8
+        word = int.from_bytes(enc[bit // 8:bit // 8 + 3], "big")
+        word = word & ~(0xFFF << shift) | (1 << shift)
+        bad = bytearray(enc)
+        bad[bit // 8:bit // 8 + 3] = word.to_bytes(3, "big")
+        assert _parse_side_info(
+            _Bits(bytes(bad), si_bit), 1)["granules"][0][0][
+                "part2_3_length"] == 1
+        ok, got = decode_mp3(enc), decode_mp3(bytes(bad))
+        assert got is not None and got[3] == ok[3] - 1152
+
     def test_honesty_gate_and_dispatch(self):
         """Unmarked (real-world-shaped) MP3 streams must NOT decode —
         they keep parse_mp3's header-only path; marked streams flow
@@ -12657,6 +12694,51 @@ class TestVideoContainers:
 
         m = parse_mp4(build_mp4(sizes=[100, 80, 120], sync=[-1, 1]))
         assert [k[0] for k in m["keyframes"]] == [1]
+
+    @staticmethod
+    def _flip_top_bit(b: bytes, box: bytes, field_off: int) -> bytes:
+        """b with the high bit of the 32-bit field `field_off` bytes
+        past the `box` fourcc flipped."""
+        mut = bytearray(b)
+        mut[b.index(box) + field_off] ^= 0x80
+        return bytes(mut)
+
+    def test_mp4_counts_past_int32_are_corrupt(self):
+        # one bit flip in the first stts sample count (3 -> 2^31 + 3)
+        # or stsz size overflows VIDEO_KF_SCHEMA's IntegerType: the
+        # track is unparsable rather than a value Arrow cannot hold
+        from fuzi_spark.ops.mp4 import (
+            build_m4a,
+            build_mp4,
+            parse_m4a,
+            parse_mp4,
+        )
+
+        b = build_mp4(sizes=[100, 80, 120], sync=[0])
+        assert parse_mp4(b)["n_samples"] == 3
+        # stts: fourcc, version/flags, entry count, then sample_count
+        assert parse_mp4(self._flip_top_bit(b, b"stts", 12)) is None
+        # stsz: fourcc, version/flags, sample_size, count, then sizes
+        assert parse_mp4(self._flip_top_bit(b, b"stsz", 20)) is None
+        a = build_m4a()
+        assert parse_m4a(a)["n_samples"] == 100
+        assert parse_m4a(self._flip_top_bit(a, b"stts", 12)) is None
+
+    def test_spark_operator_survives_stts_bit_flip(self, spark):
+        from fuzi_spark.ops.mp4 import build_mp4, video_keyframes_df
+        from fuzi_spark.ops.multimodal import MEDIA_SCHEMA
+
+        good = build_mp4(sizes=[50, 60, 70], sync=[0, 2])
+        rows = [
+            ("v/ok", "video", bytearray(good), None, None, None, None),
+            ("v/flip", "video",
+             bytearray(self._flip_top_bit(good, b"stts", 12)),
+             None, None, None, None),
+        ]
+        got = {r.media_ref: r for r in video_keyframes_df(
+            spark.createDataFrame(rows, MEDIA_SCHEMA)).collect()}
+        assert got["v/ok"].parse_ok == 1 and got["v/ok"].n_samples == 3
+        assert got["v/flip"].parse_ok == 0
 
     def test_mkv_roundtrip_and_offsets(self):
         from fuzi_spark.ops.mp4 import build_mkv, parse_mkv

@@ -8,10 +8,16 @@ an HTML page, a namespaced XML feed whose query prefixes are bound ONLY
 through the `ns` argument, null markup, and markup no parser accepts.
 The explodes without another Spark-surface test (captions outline,
 code blocks) and the extraction operator's anchor rows are pinned the
-same way."""
+same way.
+
+The columns of one select share one parse per document per Arrow batch:
+counted in-process on the pandas functions behind the column functions,
+and pinned in Spark on a select whose rows all travel in one batch."""
 
 import math
+from collections import Counter
 
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -80,11 +86,11 @@ COLUMNS = [
 ]
 
 
-def _parse(markup):
+def _parse(markup, doc_type=None):
     if markup is None:
         return None
     try:
-        if sniff_doc_type(markup) == "html":
+        if (doc_type or sniff_doc_type(markup)) == "html":
             return fz.parse_html(markup)
         return fz.parse_xml(markup)
     except Exception:
@@ -94,11 +100,11 @@ def _parse(markup):
 NULL_RESULT = {"bool_value": None, "double_value": None, "string_value": None}
 
 
-def _reference(markup, fn, expr):
+def _reference(markup, fn, expr, doc_type=None):
     """Single-process answer of one column for one document. A struct
     column cannot be null per row, so a missing doc's XPathResult is
     the struct of nulls."""
-    doc = _parse(markup)
+    doc = _parse(markup, doc_type)
     if fn == "doc_meta":
         if doc is None or doc.root is None:
             return {"version": None, "encoding": None, "root_tag": None,
@@ -138,23 +144,27 @@ def _same(a, b):
     return a == b
 
 
-def _column(fn, expr):
+def _column(fn, expr, doc_type=None):
     from fuzi_spark import udfs
 
     if fn == "doc_meta":
-        return udfs.doc_meta()
-    return getattr(udfs, fn)(expr, ns=NS)
+        return udfs.doc_meta(doc_type)
+    return getattr(udfs, fn)(expr, doc_type, ns=NS)
+
+
+def _select_rows(d, columns):
+    got = d.select(
+        "kind",
+        *[_column(fn, expr, *dt)(F.col("markup")).alias(name)
+          for name, fn, expr, *dt in columns],
+    )
+    return {r["kind"]: r.asDict(recursive=True) for r in got.collect()}
 
 
 @pytest.fixture(scope="module")
 def query_rows(spark):
     d = spark.createDataFrame(INPUTS, "kind string, markup string")
-    got = d.select(
-        "kind",
-        *[_column(fn, expr)(F.col("markup")).alias(name)
-          for name, fn, expr in COLUMNS],
-    )
-    return {r["kind"]: r.asDict(recursive=True) for r in got.collect()}
+    return _select_rows(d, COLUMNS)
 
 
 @pytest.mark.parametrize("kind", [k for k, _ in INPUTS])
@@ -164,6 +174,131 @@ def test_column_matches_single_process(query_rows, kind, name, fn, expr):
     want = _reference(markup, fn, expr)
     got = query_rows[kind][name]
     assert _same(got, want), (kind, name, got, want)
+
+
+# the one-batch select puts an html-typed column between sniffed ones,
+# next to its sniffed twin: the two differ on the feed and on the
+# unparseable markup, so a shared parse that ignored doc_type shows
+ONE_BATCH_COLUMNS = COLUMNS[:4] + [
+    ("root", "xpath_string", "name(/node()[last()])"),
+    ("root_html", "xpath_string", "name(/node()[last()])", "html"),
+] + COLUMNS[4:]
+
+
+@pytest.fixture(scope="module")
+def one_batch_rows(spark):
+    """Every input row in ONE Arrow batch, so all the query columns of
+    the select share one batch's parsed documents."""
+    d = spark.createDataFrame(INPUTS, "kind string, markup string").coalesce(1)
+    assert d.rdd.getNumPartitions() == 1
+    return _select_rows(d, ONE_BATCH_COLUMNS)
+
+
+@pytest.mark.parametrize("kind", [k for k, _ in INPUTS])
+@pytest.mark.parametrize(
+    "name,fn,expr,doc_type",
+    [(*c, None)[:4] for c in ONE_BATCH_COLUMNS],
+    ids=[c[0] for c in ONE_BATCH_COLUMNS],
+)
+def test_one_batch_column_matches_single_process(
+    one_batch_rows, kind, name, fn, expr, doc_type
+):
+    markup = dict(INPUTS)[kind]
+    want = _reference(markup, fn, expr, doc_type)
+    got = one_batch_rows[kind][name]
+    assert _same(got, want), (kind, name, got, want)
+
+
+def test_one_batch_typed_twin_differs(one_batch_rows):
+    """The html-typed column really answers differently from its
+    sniffed twin on the same batch."""
+    assert one_batch_rows["feed"]["root"] == "feed"
+    assert one_batch_rows["feed"]["root_html"] == "html"
+    assert one_batch_rows["unparseable"]["root"] is None
+    assert one_batch_rows["unparseable"]["root_html"] == "html"
+
+
+# ------------------------------------------- one parse per document per batch
+
+
+@pytest.fixture
+def parses(monkeypatch):
+    """Counts udfs._parse_doc calls per markup string, starting from an
+    empty shared-document slot."""
+    from fuzi_spark import udfs
+
+    seen = Counter()
+    parse = udfs._parse_doc
+
+    def counting(text, doc_type):
+        seen[text] += 1
+        return parse(text, doc_type)
+
+    monkeypatch.setattr(udfs, "_parse_doc", counting)
+    monkeypatch.setattr(udfs, "_shared_docs", None)
+    return seen
+
+
+def _batch():
+    return pd.Series([m for _, m in INPUTS], dtype=object)
+
+
+def _three_columns(doc_type=None):
+    """The pandas functions behind three different column functions."""
+    return [
+        _column("xpath_select", "//p", doc_type).func,
+        _column("xpath_string", "string(//title | /a:feed/a:title)",
+                doc_type).func,
+        _column("doc_meta", None, doc_type).func,
+    ]
+
+
+NON_NULL = [m for _, m in INPUTS if m is not None]
+
+
+def test_columns_of_one_batch_parse_each_doc_once(parses):
+    batch = _batch()
+    for fn in _three_columns():
+        fn(batch)
+    assert parses == Counter(NON_NULL)
+
+
+def test_equal_but_distinct_batch_reparses(parses):
+    a, b = _three_columns()[:2]
+    a(_batch())
+    b(_batch())
+    assert parses == Counter(NON_NULL * 2)
+
+
+def test_other_doc_type_reparses(parses):
+    batch = _batch()
+    _three_columns()[0](batch)
+    _three_columns("html")[1](batch)
+    assert parses == Counter(NON_NULL * 2)
+
+
+def _values(fn, batch):
+    got = fn(batch)
+    return got.to_dict("records") if isinstance(got, pd.DataFrame) else list(got)
+
+
+def test_rows_past_budget_parse_per_column(parses, monkeypatch):
+    """Past the markup budget each column parses on its own, and every
+    value equals the unshared per-column path (a budget of 0)."""
+    from fuzi_spark import udfs
+
+    columns = _three_columns()
+    monkeypatch.setattr(udfs, "_SHARED_MARKUP_BUDGET", 0)
+    unshared = [_values(fn, _batch()) for fn in columns]
+    parses.clear()
+
+    # only the first row (the HTML page) fits
+    monkeypatch.setattr(udfs, "_SHARED_MARKUP_BUDGET", len(HTML_PAGE))
+    batch = _batch()
+    assert [_values(fn, batch) for fn in columns] == unshared
+    assert parses == Counter(
+        {HTML_PAGE: 1, XML_FEED: len(columns), UNPARSEABLE: len(columns)}
+    )
 
 
 def test_xpath_eval_binds_prefix_through_ns(query_rows):
