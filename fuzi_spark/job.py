@@ -31,10 +31,12 @@ Design notes:
   (`spark.read.table` / `df.writeTo(...).append()`), which is the Iceberg
   DataFrame API — the catalog jars/config come from spark-submit --conf
   (spark.sql.catalog.*). Parquet paths are the self-contained dev surface.
-- Resume: with --output/--output-table set, previously committed buckets
-  (recorded in the lineage table) are anti-joined out before extraction, so
-  a re-run after a partial failure only processes the remainder
-  (pipeline.committed_buckets).
+- Resume: with --output set, previously committed buckets (recorded in
+  <--output>/lineage) are anti-joined out before extraction, so a re-run
+  after a partial failure only processes the remainder
+  (pipeline.committed_buckets). The catalog-table surface has no resume:
+  each --output-table run re-extracts everything under a new run_id, and
+  its readers see each run's rows through the --lineage-table manifest.
 - The job prints a one-line JSON summary (docs, spans, parse errors,
   buckets committed) to stdout for the orchestrator.
 """
@@ -219,7 +221,12 @@ def main(argv=None) -> int:
 
     from .pipeline import DEFAULT_GIANT_THRESHOLD, run_extraction_pipeline
 
-    args = build_arg_parser().parse_args(argv)
+    parser = build_arg_parser()
+    args = parser.parse_args(argv)
+    if args.mode == "extract" and args.output_table and not args.lineage_table:
+        # the lineage append is the commit record: without it every span
+        # row of the run stays invisible to a manifest reader
+        parser.error("--output-table requires --lineage-table")
     spark = make_spark(args)
     t0 = time.time()
 
@@ -274,8 +281,7 @@ def main(argv=None) -> int:
             F.col("run_id") == run_id
         )
         lineage = _lineage_agg(written).withColumn("run_id", F.lit(run_id))
-        if args.lineage_table:
-            append_table(lineage, args.lineage_table)
+        append_table(lineage, args.lineage_table)
         totals = lineage.groupBy().agg(
             F.sum("doc_count").alias("docs"),
             F.sum("span_count").alias("spans"),

@@ -28,15 +28,20 @@ Design notes for 1000-executor scale:
   a metadata-sized broadcast, no shuffle of the big side beyond the one it
   already needs.
 - Exactly-once without atomic multi-file renames: the MANIFEST protocol.
-  Every run stamps its span rows with a fresh run_id; spans are written
-  first (the only pass over the raw input), then lineage — derived from
-  the already-durable span files, so nothing is extracted twice — is
-  committed as a single small parquet job. The lineage rows ARE the commit
-  record: readers (read_committed_spans) only see spans whose
-  (bucket, run_id) appears in lineage. A run killed between the two writes
-  leaves orphan span files that no reader ever sees; the re-run extracts
-  the bucket again under a new run_id and commits it. Same idea as an
-  Iceberg snapshot commit, expressed on the plain-parquet dev surface.
+  One core below is shared by every writer: batch and streaming
+  extraction, streaming_exact_dedup and streaming_near_dedup.
+  manifest_commit stamps the payload with a fresh run_id and appends it
+  (the only pass over the raw input), then derives the manifest from this
+  run's already-durable rows (nothing is computed twice, and the manifest
+  cannot disagree with the files), stamps it with run_id and batch_id (the
+  micro-batch id, null for a batch run, so every lineage file has one
+  schema) and appends it as one small parquet job: that append IS the
+  commit. Readers (read_committed) semi-join the payload against the
+  manifest, so a run killed between the two writes leaves orphan files
+  that no reader ever sees; the re-run writes them again under a new
+  run_id. committed_manifest is the one probe, stream_batches the one
+  foreachBatch runner, which skips a redelivered batch_id. Same idea as
+  an Iceberg snapshot commit, expressed on the plain-parquet dev surface.
   (Single-writer protocol: two runs racing the same bucket would both
   commit; orchestration must not overlap runs on one output dir.)
 """
@@ -51,7 +56,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .udfs import extract_markup_df, extract_spans_df, spans_to_markup
+from .udfs import extract_markup_df, spans_to_markup
 
 # Giant-doc threshold, calibrated by measurement (round 1): the extractor
 # amortizes per-doc overhead on large documents (~58 MB/s on a 7.5 MB doc
@@ -98,19 +103,132 @@ def salt_partition(
     return docs.repartition(num_partitions, part_key)
 
 
-def committed_buckets(spark: SparkSession, lineage_path: str) -> Optional[DataFrame]:
-    """Bucket ids already fully extracted (from prior runs' lineage).
+# The only two read failures that mean "nothing committed yet": the
+# manifest dir does not exist, or it holds nothing but the _temporary/
+# files of a killed first commit. Anything else (a manifest without the
+# columns a probe reads, permissions, a corrupt footer) must surface, not
+# silently restart from scratch or switch the redelivery guard off.
+_NOTHING_COMMITTED = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def committed_manifest(
+    spark: SparkSession, manifest_path: str
+) -> Optional[DataFrame]:
+    """The manifest rows of every committed run, or None before the first
+    commit.
 
     Probed by ATTEMPTING the read, not an os.path.exists check: the
     output dir is a Hadoop-FS path (s3a://, hdfs://, file:) and a
     driver-local FS probe is always False for remote schemes — which
-    would silently disable resume. Only path-not-found (AnalysisException)
-    means "no lineage yet"; any other failure (permissions, corrupt
-    manifest) must surface, not silently restart from scratch."""
+    would silently disable resume and the redelivery guard."""
     try:
-        return spark.read.parquet(lineage_path).select("bucket").distinct()
-    except AnalysisException:
-        return None
+        return spark.read.parquet(manifest_path)
+    except AnalysisException as e:
+        if e.getCondition() in _NOTHING_COMMITTED:
+            return None
+        raise
+
+
+# The (payload, manifest) subdirectories of an extraction output dir.
+_SPANS = ("spans", "lineage")
+
+
+def manifest_commit(
+    payload: DataFrame,
+    output_dir: str,
+    layout: tuple,
+    manifest_of,
+    batch_id: Optional[int] = None,
+    partition_by: Optional[str] = None,
+):
+    """The one writer of the manifest protocol (module docstring): append
+    `payload` under a fresh run_id to the layout's payload dir, then
+    append `manifest_of(written)` — computed from this run's durable rows
+    — stamped with run_id and batch_id to its manifest dir. Returns
+    (written, committed): this run's durable payload and manifest rows."""
+    spark = payload.sparkSession
+    payload_path, manifest_path = (os.path.join(output_dir, d) for d in layout)
+    run_id = uuid.uuid4().hex
+    writer = payload.withColumn("run_id", F.lit(run_id)).write.mode("append")
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(payload_path)
+    # a column-pruned scan of the durable rows; other runs' files are
+    # skipped via parquet stats on the constant run_id column
+    written = spark.read.parquet(payload_path).filter(F.col("run_id") == run_id)
+    manifest = (
+        manifest_of(written)
+        .withColumn("run_id", F.lit(run_id))
+        .withColumn("batch_id", F.lit(batch_id).cast("bigint"))
+    )
+    _commit_lineage(manifest, manifest_path)
+    committed = spark.read.parquet(manifest_path).filter(F.col("run_id") == run_id)
+    return written, committed
+
+
+def read_committed(
+    spark: SparkSession, output_dir: str, layout: tuple, keys: list
+) -> DataFrame:
+    """Exactly-once read view: only payload rows whose `keys` are recorded
+    in the manifest are visible. Orphan rows of a run killed between its
+    two writes are filtered out by a broadcast semi-join against the
+    metadata-sized manifest — the payload never shuffles."""
+    payload_path, manifest_path = (os.path.join(output_dir, d) for d in layout)
+    manifest = spark.read.parquet(manifest_path).select(*keys).distinct()
+    return spark.read.parquet(payload_path).join(
+        F.broadcast(manifest), keys, "left_semi"
+    )
+
+
+def stream_batches(
+    spark: SparkSession,
+    input_path: str,
+    schema,
+    checkpoint_dir: str,
+    output_dir: str,
+    layout: tuple,
+    process,
+    max_files_per_trigger: Optional[int] = None,
+    available_now: bool = True,
+):
+    """Run a parquet file stream through `process(batch_df, batch_id,
+    manifest)` under the manifest protocol, where `manifest` is the
+    layout's committed_manifest (None before the first commit).
+
+    foreachBatch is at-least-once: on restart the last batch can be
+    redelivered under the same batch_id. The manifest is the commit
+    record, so a batch whose batch_id is already in it is skipped
+    wholesale; a batch killed between its two writes left only orphan
+    rows under a run_id that never reached the manifest, and the
+    redelivery writes and commits it again under a fresh run_id."""
+    manifest_path = os.path.join(output_dir, layout[1])
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        manifest = committed_manifest(batch_df.sparkSession, manifest_path)
+        if manifest is not None and (
+            manifest.filter(F.col("batch_id") == batch_id).limit(1).count()
+        ):
+            return  # redelivered, already committed
+        process(batch_df, batch_id, manifest)
+
+    writer = (
+        reader.parquet(input_path)
+        .writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def committed_buckets(spark: SparkSession, lineage_path: str) -> Optional[DataFrame]:
+    """Bucket ids already fully extracted (from prior runs' lineage), or
+    None when nothing is committed yet (committed_manifest)."""
+    manifest = committed_manifest(spark, lineage_path)
+    return None if manifest is None else manifest.select("bucket").distinct()
 
 
 def _lineage_agg(extracted: DataFrame) -> DataFrame:
@@ -129,23 +247,48 @@ def _commit_lineage(lineage: DataFrame, lineage_path: str) -> None:
     """The commit point of the manifest protocol: one small parquet job
     (atomic at job granularity via the output committer — a killed job
     leaves only _temporary files, never visible rows). Kept as a seam so
-    the crash-injection test can fail a run between the two writes."""
+    the crash-injection tests can fail a run between the two writes."""
     lineage.write.mode("append").parquet(lineage_path)
 
 
 def read_committed_spans(spark: SparkSession, output_dir: str) -> DataFrame:
     """Exactly-once read view of the span table: only spans whose
-    (bucket, run_id) is recorded in lineage are visible. Orphan files from
-    a run killed between the spans write and the lineage commit are
-    filtered out by a broadcast semi-join against the metadata-sized
-    manifest — no shuffle of the span table."""
-    spans = spark.read.parquet(os.path.join(output_dir, "spans"))
-    manifest = (
-        spark.read.parquet(os.path.join(output_dir, "lineage"))
-        .select("bucket", "run_id")
-        .distinct()
+    (bucket, run_id) is recorded in lineage are visible."""
+    return read_committed(spark, output_dir, _SPANS, ["bucket", "run_id"])
+
+
+def _extract(
+    docs: DataFrame,
+    n_buckets: int,
+    num_partitions: int,
+    giant_threshold: int,
+    doc_type: Optional[str],
+    done: Optional[DataFrame] = None,
+) -> DataFrame:
+    """docs (doc_id, spans[, doc_type]) → extracted spans with their
+    bucket, skipping the buckets in `done`."""
+    # span→markup codec BEFORE the salting shuffle: the exchange then
+    # carries ONE string column per doc instead of the array-of-structs
+    # spans payload (per-span kind/media_ref/offset fields + Arrow struct
+    # overhead) — at 10^12 docs shuffle bytes are the scarce resource.
+    # doc_weight falls out for free as length(markup): the codec concats
+    # coalesce(text,'') over every span, so the two are identical by
+    # construction (the old with_weight_and_bucket aggregate was a second
+    # full pass over the spans arrays).
+    docs = (
+        spans_to_markup(docs)
+        .withColumn("doc_weight", F.length(F.coalesce("markup", F.lit(""))))
+        .withColumn("bucket", bucket_col(n_buckets))
     )
-    return spans.join(F.broadcast(manifest), ["bucket", "run_id"], "left_semi")
+    if done is not None:
+        docs = docs.join(F.broadcast(done), "bucket", "left_anti")
+
+    docs = salt_partition(docs, num_partitions, giant_threshold)
+
+    extracted = extract_markup_df(docs, doc_type)
+    # re-attach the stable bucket (cheap hash recompute — avoids carrying it
+    # through the Python stage)
+    return extracted.withColumn("bucket", bucket_col(n_buckets))
 
 
 def run_extraction_pipeline(
@@ -170,55 +313,17 @@ def run_extraction_pipeline(
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism * 2
 
-    # span→markup codec BEFORE the salting shuffle: the exchange then
-    # carries ONE string column per doc instead of the array-of-structs
-    # spans payload (per-span kind/media_ref/offset fields + Arrow struct
-    # overhead) — at 10^12 docs shuffle bytes are the scarce resource.
-    # doc_weight falls out for free as length(markup): the codec concats
-    # coalesce(text,'') over every span, so the two are identical by
-    # construction (the old with_weight_and_bucket aggregate was a second
-    # full pass over the spans arrays).
-    docs = (
-        spans_to_markup(docs)
-        .withColumn("doc_weight", F.length(F.coalesce("markup", F.lit(""))))
-        .withColumn("bucket", bucket_col(n_buckets))
+    done = None
+    if output_dir and resume:
+        done = committed_buckets(spark, os.path.join(output_dir, "lineage"))
+
+    extracted = _extract(
+        docs, n_buckets, num_partitions, giant_threshold, doc_type, done
     )
-
-    spans_path = lineage_path = None
     if output_dir:
-        spans_path = os.path.join(output_dir, "spans")
-        lineage_path = os.path.join(output_dir, "lineage")
-        if resume:
-            done = committed_buckets(spark, lineage_path)
-            if done is not None:
-                docs = docs.join(F.broadcast(done), "bucket", "left_anti")
-
-    docs = salt_partition(docs, num_partitions, giant_threshold)
-
-    extracted = extract_markup_df(docs, doc_type)
-    # re-attach the stable bucket (cheap hash recompute — avoids carrying it
-    # through the Python stage)
-    extracted = extracted.withColumn("bucket", bucket_col(n_buckets))
-
-    if output_dir:
-        run_id = uuid.uuid4().hex
-        # the ONE pass over the raw input: extract + write spans
-        extracted.withColumn("run_id", F.lit(run_id)).write.mode(
-            "append"
-        ).partitionBy("bucket").parquet(spans_path)
-        # lineage from the durable files — a column-pruned scan of
-        # (bucket, seq, parse_error, run_id); other runs' files are skipped
-        # via parquet stats on the constant run_id column
-        written = spark.read.parquet(spans_path).filter(
-            F.col("run_id") == run_id
+        return manifest_commit(
+            extracted, output_dir, _SPANS, _lineage_agg, None, "bucket"
         )
-        lineage = _lineage_agg(written).withColumn("run_id", F.lit(run_id))
-        _commit_lineage(lineage, lineage_path)
-        committed = spark.read.parquet(lineage_path).filter(
-            F.col("run_id") == run_id
-        )
-        return written, committed
-
     return extracted, _lineage_agg(extracted)
 
 
@@ -256,12 +361,12 @@ def streaming_extraction(
     """Structured-Streaming variant of the extraction job: continuously
     ingest interleaved-document files, extract, and append spans + lineage.
 
-    Spark-first shape: the SAME Arrow-batched extraction operator runs on
-    the stream (mapInPandas is streaming-compatible); per-micro-batch
-    lineage is written via foreachBatch so each batch commits spans and
-    its lineage rows together. Exactly-once across restarts comes from the
-    checkpoint; the per-bucket lineage additionally enables the same
-    committed-bucket resume protocol as the batch job.
+    Each micro-batch runs the batch job's own path — codec before the
+    salting shuffle, extraction, then manifest_commit with its batch_id —
+    into the same output layout, so read_committed_spans serves batch and
+    streaming runs alike. Bucket resume stays off: new documents land in
+    buckets that earlier batches already committed, so stream_batches'
+    batch_id guard, not the bucket anti-join, is the idempotence key.
 
     The reference has no streaming surface (SURVEY.md §2.8) — this is the
     pipeline-level capability a continuous crawl ingest needs."""
@@ -276,67 +381,20 @@ def streaming_extraction(
             StructField("spans", SPANS_ARRAY),
         ]
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
+    num_partitions = spark.sparkContext.defaultParallelism * 2
 
-    spans_path = os.path.join(output_dir, "spans")
-    lineage_path = os.path.join(output_dir, "lineage")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: on restart the last batch can be
-        # redelivered. Lineage is the commit record, so a batch whose
-        # batch_id is already committed is skipped wholesale, and a batch
-        # killed between the spans write and the lineage commit leaves
-        # only orphan span files under a run_id that never reaches the
-        # manifest — invisible to read_committed_spans; the redelivery
-        # rewrites it under a fresh run_id. Exactly-once at the read
-        # surface either way.
-        #
-        # The probe ATTEMPTS the filtered read (Hadoop-FS-scheme-agnostic:
-        # works for s3a://, hdfs://, file:); only path-not-found means
-        # "no lineage yet". A driver-local os.path.exists check (the
-        # round-2 form) was always False for remote schemes, and its
-        # blanket except disabled the guard entirely — letting a
-        # redelivered batch re-commit under a fresh run_id and
-        # double-count its spans at the read surface (round-3 ADVICE fix).
-        try:
-            already = (
-                batch_df.sparkSession.read.parquet(lineage_path)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if already:
-                return
-        except AnalysisException:
-            pass  # first batch ever: lineage dir doesn't exist yet
-        run_id = uuid.uuid4().hex
-        extracted = (
-            extract_spans_df(batch_df, doc_type)
-            .withColumn("bucket", bucket_col(n_buckets))
-            .withColumn("run_id", F.lit(run_id))
+    def process(batch_df: DataFrame, batch_id: int, _manifest) -> None:
+        extracted = _extract(
+            batch_df, n_buckets, num_partitions, DEFAULT_GIANT_THRESHOLD, doc_type
         )
-        extracted.persist()
-        try:
-            extracted.write.mode("append").partitionBy("bucket").parquet(spans_path)
-            lineage = (
-                _lineage_agg(extracted)
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("batch_id", F.lit(batch_id))
-            )
-            _commit_lineage(lineage, lineage_path)
-        finally:
-            extracted.unpersist()
+        manifest_commit(
+            extracted, output_dir, _SPANS, _lineage_agg, batch_id, "bucket"
+        )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return stream_batches(
+        spark, input_path, schema, checkpoint_dir, output_dir, _SPANS, process,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def verification_join(extracted: DataFrame, golden: DataFrame) -> DataFrame:

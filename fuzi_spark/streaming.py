@@ -10,9 +10,14 @@ from __future__ import annotations
 import os
 from typing import Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .pipeline import manifest_commit, read_committed, stream_batches
+
+# The (payload, manifest) subdirectories of the two streaming dedups.
+_DIGESTS = ("novel", "digests")
+_BANDS = ("novel", "bands")
 
 
 def windowed_event_counts(events: DataFrame, window: str = "1 day") -> DataFrame:
@@ -230,60 +235,23 @@ def streaming_exact_dedup(
     every previously committed batch (the training-ingest "have we crawled
     this page before" gate).
 
-    Same manifest protocol as the extraction job (pipeline module
-    docstring): novel rows land first under a fresh run_id, then the
-    (digest, batch_id, run_id) rows are appended to the digest manifest —
-    the manifest append IS the commit. foreachBatch is at-least-once; a
-    redelivered batch whose batch_id is already in the manifest is skipped
-    wholesale, and a batch killed between the two writes leaves novel rows
-    whose (batch_id, run_id) never reaches the manifest — invisible to
-    `read_novel_docs`, re-written by the redelivery. The seen-set read
-    only trusts manifest digests, so orphans can never suppress a
-    legitimate novel row either."""
-    stream_reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        stream_reader = stream_reader.option(
-            "maxFilesPerTrigger", max_files_per_trigger
-        )
-    stream = stream_reader.parquet(input_path)
+    Commits through the extraction job's manifest protocol (pipeline
+    module docstring): novel/ is the payload and digests/ the manifest of
+    (digest, run_id, batch_id) rows. The seen-set read only trusts
+    manifest digests, so orphans can never suppress a legitimate novel
+    row either."""
 
-    novel_path = os.path.join(output_dir, "novel")
-    digest_path = os.path.join(output_dir, "digests")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import uuid as _uuid
-
-        s = batch_df.sparkSession
-        seen = None
-        try:
-            seen = s.read.parquet(digest_path)
-            if (
-                seen.filter(F.col("batch_id") == batch_id).limit(1).count()
-            ):
-                return  # redelivered, already committed
-        except AnalysisException:
-            pass  # first batch ever
-        run_id = _uuid.uuid4().hex
+    def process(batch_df: DataFrame, batch_id: int, seen) -> None:
         novel = dedup_novel(batch_df, seen, text_col, id_col).withColumn(
             "batch_id", F.lit(batch_id)
-        ).withColumn("run_id", F.lit(run_id))
-        novel.write.mode("append").parquet(novel_path)
-        # commit point: manifest rows derive from the durable novel files
-        # (no second dedup pass, and the manifest can never disagree with
-        # what was actually written)
-        (
-            s.read.parquet(novel_path)
-            .filter((F.col("batch_id") == batch_id) & (F.col("run_id") == run_id))
-            .select("digest", "batch_id", "run_id")
-            .write.mode("append")
-            .parquet(digest_path)
+        )
+        manifest_commit(
+            novel, output_dir, _DIGESTS, lambda w: w.select("digest"), batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_batches(
+        spark, input_path, schema, checkpoint_dir, output_dir, _DIGESTS,
+        process, max_files_per_trigger,
     )
 
 
@@ -292,13 +260,7 @@ def read_novel_docs(spark: SparkSession, output_dir: str) -> DataFrame:
     whose (batch_id, run_id) is recorded in the digest manifest. Broadcast
     semi-join against the metadata-sized (batch, run) pairs — the novel
     table never shuffles."""
-    novel = spark.read.parquet(os.path.join(output_dir, "novel"))
-    manifest = (
-        spark.read.parquet(os.path.join(output_dir, "digests"))
-        .select("batch_id", "run_id")
-        .distinct()
-    )
-    return novel.join(F.broadcast(manifest), ["batch_id", "run_id"], "left_semi")
+    return read_committed(spark, output_dir, _DIGESTS, ["batch_id", "run_id"])
 
 
 def near_novel(
@@ -386,81 +348,36 @@ def streaming_near_dedup(
     that are not near-duplicates (minhash-LSH collision) of anything
     previously committed or of an earlier doc in the same batch.
 
-    Identical manifest protocol to streaming_exact_dedup — novel rows
-    land under a fresh run_id, then the survivors' BAND KEYS (band,
-    bucket, batch_id, run_id) are appended to the band manifest; the
-    manifest append IS the commit. Redelivered batch_ids are skipped;
-    a crash between the writes leaves orphan novel rows invisible to
-    read_novel_docs and re-written by the redelivery; the seen-set
-    only trusts manifest keys. Output layout: novel/ + bands/ under
-    output_dir (read_novel_docs reads novel/ against bands/)."""
-    stream_reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        stream_reader = stream_reader.option(
-            "maxFilesPerTrigger", max_files_per_trigger
-        )
-    stream = stream_reader.parquet(input_path)
+    Same manifest protocol as streaming_exact_dedup, with the survivors'
+    BAND KEYS (band, bucket, run_id, batch_id) as the manifest: novel/ +
+    bands/ under output_dir (read_near_novel_docs reads novel/ against
+    bands/); the seen-set only trusts manifest keys."""
 
-    novel_path = os.path.join(output_dir, "novel")
-    bands_path = os.path.join(output_dir, "bands")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import uuid as _uuid
-
+    def process(batch_df: DataFrame, batch_id: int, seen) -> None:
         from fuzi_spark.ops.cache import cache_scope
 
-        s = batch_df.sparkSession
-        seen = None
-        try:
-            seen = s.read.parquet(bands_path)
-            if seen.filter(F.col("batch_id") == batch_id).limit(1).count():
-                return  # redelivered, already committed
-        except AnalysisException:
-            pass  # first batch ever
-        run_id = _uuid.uuid4().hex
         with cache_scope():
             novel, novel_bands = near_novel(
                 batch_df, seen, text_col, id_col, n_hashes, bands, shingle_n
             )
-            novel = novel.withColumn("batch_id", F.lit(batch_id)).withColumn(
-                "run_id", F.lit(run_id)
-            )
-            novel.write.mode("append").parquet(novel_path)
-            # commit point: band keys derive from the DURABLE novel rows
-            committed_ids = (
-                s.read.parquet(novel_path)
-                .filter(
-                    (F.col("batch_id") == batch_id)
-                    & (F.col("run_id") == run_id)
-                )
-                .select(id_col)
-            )
-            (
-                novel_bands.join(committed_ids, id_col, "left_semi")
-                .select("band", "bucket")
-                .withColumn("batch_id", F.lit(batch_id))
-                .withColumn("run_id", F.lit(run_id))
-                .write.mode("append")
-                .parquet(bands_path)
+            manifest_commit(
+                novel.withColumn("batch_id", F.lit(batch_id)),
+                output_dir,
+                _BANDS,
+                # band keys of the DURABLE novel rows only
+                lambda written: novel_bands.join(
+                    written.select(id_col), id_col, "left_semi"
+                ).select("band", "bucket"),
+                batch_id,
             )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_batches(
+        spark, input_path, schema, checkpoint_dir, output_dir, _BANDS,
+        process, max_files_per_trigger,
     )
 
 
 def read_near_novel_docs(spark: SparkSession, output_dir: str) -> DataFrame:
     """Committed-only view of streaming_near_dedup output: novel rows
     whose (batch_id, run_id) is in the band manifest."""
-    novel = spark.read.parquet(os.path.join(output_dir, "novel"))
-    manifest = (
-        spark.read.parquet(os.path.join(output_dir, "bands"))
-        .select("batch_id", "run_id")
-        .distinct()
-    )
-    return novel.join(
-        F.broadcast(manifest), ["batch_id", "run_id"], "left_semi"
-    )
+    return read_committed(spark, output_dir, _BANDS, ["batch_id", "run_id"])

@@ -710,7 +710,9 @@ def _match_test(test, axis: str, n: Node, ns: dict) -> bool:
     # element
     if local != "*" and n.tag != local:
         return False
-    return (n.ns_uri or None) == uri
+    # an un-prefixed * matches every element, whatever its namespace
+    # (XPath 1.0 §2.3); an un-prefixed name only matches in no namespace
+    return (prefix is None and local == "*") or (n.ns_uri or None) == uri
 
 
 # ---------------------------------------------------------------- evaluator

@@ -305,6 +305,169 @@ class TestStreaming:
         assert spark.read.parquet(_os.path.join(out, "spans")).count() == n_before
 
 
+def _span_rows(df):
+    return sorted((r.doc_id, r.seq, r.kind, r.text, r.media_ref) for r in df.collect())
+
+
+class TestManifestProbe:
+    """pipeline.committed_manifest: only a missing manifest dir or one
+    holding nothing but a killed first commit's _temporary/ files reads as
+    "nothing committed"; every other read failure surfaces."""
+
+    def test_nothing_committed_conditions(self, spark, tmp_path):
+        from fuzi_spark.pipeline import committed_manifest
+
+        assert committed_manifest(spark, str(tmp_path / "missing")) is None
+        killed = tmp_path / "killed"
+        (killed / "_temporary" / "0").mkdir(parents=True)
+        assert committed_manifest(spark, str(killed)) is None
+
+    def test_batch_lineage_reads_batch_not_committed(self, spark, tmp_path):
+        """A batch run's lineage carries a null batch_id, so the streaming
+        redelivery guard reads "not committed" on it instead of failing;
+        a streaming run then commits into the same dir next to it."""
+        from pyspark.sql import functions as F
+
+        from fuzi_spark.corpus import corpus_df
+        from fuzi_spark.pipeline import (
+            committed_manifest,
+            read_committed_spans,
+            run_extraction_pipeline,
+            streaming_extraction,
+        )
+
+        docs = corpus_df(spark, include_fixtures=False, skew=False)
+        inp, out, cp = (str(tmp_path / d) for d in ("in", "out", "cp"))
+        docs.write.parquet(inp)
+        run_extraction_pipeline(
+            spark, docs, output_dir=out, n_buckets=4, num_partitions=4
+        )
+        batch_rows = _span_rows(read_committed_spans(spark, out))
+        manifest = committed_manifest(spark, os.path.join(out, "lineage"))
+        assert dict(manifest.dtypes)["batch_id"] == "bigint"
+        assert manifest.filter(F.col("batch_id") == 0).count() == 0
+
+        q = streaming_extraction(spark, inp, out, cp, n_buckets=4)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        # streaming never resumes buckets: every doc is committed twice
+        assert _span_rows(read_committed_spans(spark, out)) == sorted(
+            batch_rows * 2
+        )
+        lineage = spark.read.parquet(os.path.join(out, "lineage"))
+        batch_ids = {r.batch_id for r in lineage.select("batch_id").collect()}
+        assert batch_ids == {None, 0}
+
+    def test_manifest_without_batch_id_raises(self, spark, tmp_path):
+        """A manifest the guard cannot read must stop the stream, not be
+        taken for "first batch ever" (which switched the guard off)."""
+        from pyspark.errors import StreamingQueryException
+
+        from fuzi_spark.corpus import corpus_df
+        from fuzi_spark.pipeline import streaming_extraction
+
+        inp, out, cp = (str(tmp_path / d) for d in ("in", "out", "cp"))
+        corpus_df(spark, include_fixtures=False, skew=False).write.parquet(inp)
+        manifest = spark.createDataFrame([(0, "r")], "bucket int, run_id string")
+        manifest.write.parquet(os.path.join(out, "lineage"))
+        q = streaming_extraction(spark, inp, out, cp, n_buckets=4)
+        with pytest.raises(StreamingQueryException, match="UNRESOLVED_COLUMN"):
+            q.awaitTermination(120)
+        assert not os.path.exists(os.path.join(out, "spans"))
+
+
+class TestStreamingCommit:
+    """The streaming extraction's batch_id guard over several
+    micro-batches that share buckets (3 input files, one per trigger)."""
+
+    @pytest.fixture(scope="class")
+    def stream_input(self, spark, tmp_path_factory):
+        from fuzi_spark.corpus import corpus_df
+        from fuzi_spark.pipeline import (
+            read_committed_spans,
+            run_extraction_pipeline,
+        )
+
+        base = tmp_path_factory.mktemp("stream_commit")
+        docs = corpus_df(spark, include_fixtures=False, skew=False)
+        inp = str(base / "in")
+        docs.repartition(3).write.parquet(inp)
+        assert len([f for f in os.listdir(inp) if f.endswith(".parquet")]) == 3
+        ref = str(base / "ref")
+        run_extraction_pipeline(
+            spark, docs, output_dir=ref, n_buckets=4, num_partitions=4
+        )
+        return inp, _span_rows(read_committed_spans(spark, ref))
+
+    @staticmethod
+    def _run(spark, inp, out, cp):
+        from fuzi_spark.pipeline import streaming_extraction
+
+        q = streaming_extraction(
+            spark, inp, out, cp, n_buckets=4, max_files_per_trigger=1
+        )
+        q.awaitTermination(180)
+        return q
+
+    def test_redelivered_batch_is_skipped(self, spark, tmp_path, stream_input):
+        from fuzi_spark.pipeline import read_committed_spans
+
+        inp, ref_rows = stream_input
+        out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+        assert self._run(spark, inp, out, cp).exception() is None
+        lineage = spark.read.parquet(os.path.join(out, "lineage"))
+        assert sorted(
+            r.batch_id for r in lineage.select("batch_id").distinct().collect()
+        ) == [0, 1, 2]
+        # batches share buckets, yet no later batch was resumed away
+        committed = _span_rows(read_committed_spans(spark, out))
+        assert committed == ref_rows
+        n_raw = spark.read.parquet(os.path.join(out, "spans")).count()
+
+        # forget that the last batch finished: Spark replays it on restart
+        # under the same batch_id, and the guard must skip it
+        commits = os.path.join(cp, "commits")
+        last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+        for f in (str(last), f".{last}.crc"):
+            if os.path.exists(os.path.join(commits, f)):
+                os.remove(os.path.join(commits, f))
+        assert self._run(spark, inp, out, cp).exception() is None
+        assert os.path.exists(os.path.join(commits, str(last)))  # replayed
+        assert _span_rows(read_committed_spans(spark, out)) == committed
+        assert spark.read.parquet(os.path.join(out, "spans")).count() == n_raw
+
+    def test_crash_between_writes_is_exactly_once(
+        self, spark, tmp_path, stream_input, monkeypatch
+    ):
+        from pyspark.errors import StreamingQueryException
+
+        from fuzi_spark import pipeline
+        from fuzi_spark.pipeline import read_committed_spans
+
+        inp, ref_rows = stream_input
+        out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+        real_commit = pipeline._commit_lineage
+        calls = []
+
+        def boom_on_second(lineage, path):
+            calls.append(path)
+            if len(calls) == 2:
+                raise RuntimeError("simulated kill between spans and lineage")
+            real_commit(lineage, path)
+
+        monkeypatch.setattr(pipeline, "_commit_lineage", boom_on_second)
+        with pytest.raises(StreamingQueryException):
+            self._run(spark, inp, out, cp)
+        monkeypatch.setattr(pipeline, "_commit_lineage", real_commit)
+
+        assert self._run(spark, inp, out, cp).exception() is None
+        assert _span_rows(read_committed_spans(spark, out)) == ref_rows
+        # the killed batch's span files are still on disk: the manifest,
+        # not luck, hides them
+        raw = spark.read.parquet(os.path.join(out, "spans")).count()
+        assert raw > len(ref_rows)
+
+
 class TestSimilarity:
     def test_ivf_recall_vs_bruteforce(self, spark):
         from pyspark.sql import functions as F
@@ -493,6 +656,16 @@ class TestJobCLI:
         assert summary["parse_errors"] == 0
         spans = spark.read.parquet(os.path.join(out, "spans"))
         assert summary["spans"] == spans.filter("seq >= 0").count()
+
+    def test_output_table_requires_lineage_table(self, spark, capsys):
+        """Without --lineage-table no run would ever be committed, so the
+        parser refuses the combination before any Spark work."""
+        from fuzi_spark.job import main
+
+        with pytest.raises(SystemExit) as e:
+            main(["--input-table", "job_docs", "--output-table", "job_spans"])
+        assert e.value.code == 2
+        assert "--lineage-table" in capsys.readouterr().err
 
     def test_table_surface_manifest_protocol(self, spark, capsys):
         from pyspark.sql import functions as F

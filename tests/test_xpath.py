@@ -152,6 +152,21 @@ def test_default_namespace_needs_prefix():
     assert len(fz.xpath(d, "//d:child")) == 1
 
 
+def test_unprefixed_star_matches_every_namespace():
+    # XPath 1.0 §2.3: `*` matches any element; only a prefix restricts it
+    d = fz.parse_xml(
+        '<feed xmlns="http://www.w3.org/2005/Atom" xmlns:m="urn:m">'
+        "<entry><m:content/></entry><plain xmlns=''/></feed>"
+    )
+    assert fz.eval_xpath(d, "count(//*)").double_value == 4
+    assert fz.eval_xpath(d, "count(/*)").double_value == 1
+    assert fz.eval_xpath(d, "name(/*)").string_value == "feed"
+    assert [e.tag for e in fz.xpath(d, "//*[local-name()='content']")] == ["content"]
+    assert [e.tag for e in fz.xpath(d, "/*/*")] == ["entry", "plain"]
+    assert len(fz.xpath(d, "//m:*", {"m": "urn:m"})) == 1
+    assert [e.tag for e in fz.xpath(d, "//plain")] == ["plain"]
+
+
 def test_namespace_redefinition():
     d = fz.parse_xml(
         '<root xmlns:ns="http://outer"><ns:a/>'
